@@ -11,13 +11,22 @@ What Airflow provided and what replaces it here:
   (keyed MERGE or staged overwrite), so overlapping or replayed ticks
   converge instead of corrupting — the same property the reference
   leans on (SURVEY.md §2.12 "freshness by re-running").
+- **Parallel DAG runs** -> one driver thread per job: the scheduler
+  ran independent DAGs side by side, and so does a tick. Each job
+  writes its own table under its own writer lease, so the jobs share
+  no sink state; Spark's FIFO scheduler runs a job that fills the
+  cluster first, so the sweep is never slower than a serial loop,
+  and on small inputs the jobs overlap. ``RunRecord.seconds`` is each
+  attempt's own wall time, so the values overlap and their sum is not
+  the tick's wall time.
 - **Task isolation** -> per-job try/except with bounded retry: one
   failing pipeline neither blocks nor poisons the others; the runner
   raises AFTER the sweep so the scheduler sees a nonzero exit while
   healthy sinks stay fresh.
 - **Metadata DB** -> an append-only parquet run ledger (job, attempt,
-  status, rows, wall seconds, error) — queryable with the same engine,
-  no extra service.
+  status, rows, wall seconds, error), one file per tick written by
+  pyarrow after every job has finished — queryable with the same
+  engine, no extra service, and no Spark job on the tick's tail.
 
 Sink modes mirror the reference's load styles (SURVEY.md §2.2):
 keyed pipelines MERGE on their document key (K1/K2,
@@ -30,12 +39,18 @@ manifest records the key so that swap is one line per job.
 
 from __future__ import annotations
 
+import os
 import time
 import traceback
-from dataclasses import dataclass
+import uuid
+from concurrent.futures import ThreadPoolExecutor
+from dataclasses import asdict, dataclass
 from typing import Callable
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.util import inheritable_thread_target
 
 from ..registry import QUERIES, load_all
 from ..sinks import merge_upsert_write, overwrite
@@ -108,6 +123,58 @@ def _persist(spec: JobSpec, df: DataFrame, out_dir: str) -> int:
     return parquet_row_count(path)
 
 
+RUN_LEDGER_SCHEMA = pa.schema([
+    ("job", pa.string()), ("attempt", pa.int32()), ("status", pa.string()),
+    ("rows", pa.int64()), ("seconds", pa.float64()), ("error", pa.string()),
+])
+BACKFILL_LEDGER_SCHEMA = pa.schema([
+    ("job", pa.string()), ("day", pa.string()), ("status", pa.string()),
+    ("rows", pa.int64()), ("seconds", pa.float64()), ("error", pa.string()),
+])
+
+
+def _append_ledger(ledger_dir: str, schema: pa.Schema, records: list) -> None:
+    """Append one sweep's records to the ledger as a single parquet
+    file. The file is written under a ``.``-prefixed name and renamed
+    into place: Spark and pyarrow skip hidden files, so a crash never
+    leaves a half-written file that a ledger read would see."""
+    os.makedirs(ledger_dir, exist_ok=True)
+    name = f"part-{time.time_ns()}-{uuid.uuid4().hex}.parquet"
+    tmp = os.path.join(ledger_dir, f".{name}")
+    pq.write_table(pa.Table.from_pylist([asdict(r) for r in records], schema=schema), tmp)
+    os.rename(tmp, os.path.join(ledger_dir, name))
+
+
+def _run_job(
+    spark: SparkSession,
+    spec: JobSpec,
+    fns: dict[str, Callable],
+    sf_dir: str,
+    out_dir: str,
+    max_attempts: int,
+) -> list[RunRecord]:
+    """One job's bounded retry loop; its attempts in order."""
+    records: list[RunRecord] = []
+    for attempt in range(1, max_attempts + 1):
+        t0 = time.perf_counter()
+        try:
+            n = _persist(spec, fns[spec.query](spark, sf_dir), out_dir)
+        except Exception:
+            records.append(
+                RunRecord(
+                    spec.name, attempt, "failed", 0,
+                    time.perf_counter() - t0,
+                    traceback.format_exc(limit=-5),  # innermost frames: the error site
+                )
+            )
+            continue
+        records.append(
+            RunRecord(spec.name, attempt, "ok", n, time.perf_counter() - t0, None)
+        )
+        break
+    return records
+
+
 def run_pipeline(
     spark: SparkSession,
     sf_dir: str,
@@ -117,44 +184,38 @@ def run_pipeline(
     query_fns: dict[str, Callable] | None = None,
     write_ledger: bool = True,
 ) -> list[RunRecord]:
-    """One scheduler tick: run every job, persist each through its
-    idempotent sink, append the attempts to the run ledger, and raise
-    AFTER the sweep if any job exhausted its retries. ``query_fns``
-    lets tests inject flaky jobs without touching the registry."""
+    """One scheduler tick: run every job concurrently, one driver
+    thread per job, persist each through its idempotent sink, append
+    the attempts to the run ledger once every job has finished, and
+    raise AFTER the sweep if any job exhausted its retries. Records
+    come back in manifest order, each job's attempts in order. Worker
+    threads inherit the caller's Spark local properties (job group,
+    scheduler pool, description), so ``sc.cancelJobGroup`` still
+    cancels a tick. ``query_fns`` lets tests inject flaky jobs without
+    touching the registry."""
     if max_attempts < 1:
         # range(1, 1) would run ZERO jobs yet exit 0 — a misconfigured
         # scheduler tick must fail loudly, not record a clean no-op
         raise ValueError(f"max_attempts must be >= 1, got {max_attempts}")
+    names = [spec.name for spec in jobs]
+    dupes = sorted({n for n in names if names.count(n) > 1})
+    if dupes:
+        # two concurrent jobs on one table would race for its writer
+        # lease and fail nondeterministically
+        raise ValueError(f"duplicate JobSpec names: {dupes}")
     load_all()
     fns = query_fns if query_fns is not None else QUERIES
-    records: list[RunRecord] = []
-    for spec in jobs:
-        for attempt in range(1, max_attempts + 1):
-            t0 = time.perf_counter()
-            try:
-                n = _persist(spec, fns[spec.query](spark, sf_dir), out_dir)
-            except Exception:
-                records.append(
-                    RunRecord(
-                        spec.name, attempt, "failed", 0,
-                        time.perf_counter() - t0,
-                        traceback.format_exc(limit=-5),  # innermost frames: the error site
-                    )
-                )
-                continue
-            records.append(
-                RunRecord(
-                    spec.name, attempt, "ok", n,
-                    time.perf_counter() - t0, None,
-                )
-            )
-            break
+    with ThreadPoolExecutor(max_workers=max(1, len(jobs))) as pool:
+        # wrapped per job: each wrapper holds its own copy of the
+        # caller's local properties, so no two threads share one
+        futures = [
+            pool.submit(inheritable_thread_target(spark)(_run_job),
+                        spark, spec, fns, sf_dir, out_dir, max_attempts)
+            for spec in jobs
+        ]
+    records = [r for f in futures for r in f.result()]
     if write_ledger:
-        spark.createDataFrame(
-            [(r.job, r.attempt, r.status, r.rows, r.seconds, r.error) for r in records],
-            "job STRING, attempt INT, status STRING, rows LONG, "
-            "seconds DOUBLE, error STRING",
-        ).coalesce(1).write.mode("append").parquet(f"{out_dir}/_run_ledger")
+        _append_ledger(f"{out_dir}/_run_ledger", RUN_LEDGER_SCHEMA, records)
     dead = sorted(
         {r.job for r in records if r.status == "failed"}
         - {r.job for r in records if r.status == "ok"}
@@ -210,8 +271,6 @@ def run_backfill(
     are SKIPPED (catchup semantics) unless ``force``; failures are
     isolated per day and raised after the sweep (same contract as
     run_pipeline)."""
-    import os
-
     from ..sinks import staged_swap
 
     records: list[BackfillRecord] = []
@@ -239,14 +298,7 @@ def run_backfill(
                                traceback.format_exc(limit=-5))
             )
     if write_ledger:
-        spark.createDataFrame(
-            [(r.job, r.day, r.status, r.rows, r.seconds, r.error)
-             for r in records],
-            "job STRING, day STRING, status STRING, rows LONG, "
-            "seconds DOUBLE, error STRING",
-        ).coalesce(1).write.mode("append").parquet(
-            f"{out_dir}/_backfill_ledger"
-        )
+        _append_ledger(f"{out_dir}/_backfill_ledger", BACKFILL_LEDGER_SCHEMA, records)
     dead = sorted(r.day for r in records if r.status == "failed")
     if dead:
         # carry the full sweep records per PipelineFailure's contract

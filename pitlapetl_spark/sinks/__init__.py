@@ -218,16 +218,12 @@ def _fail_on_merge_debris(path: str) -> None:
 def upsert_partitioned(df: DataFrame, path: str, key_cols: list[str]) -> None:
     """K1/K2 keyed upsert: replace exactly the (key...) partitions
     present in ``df``, leave all others untouched."""
-    spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        with _writer_lock(path):
-            df.write.mode("overwrite").partitionBy(*key_cols).parquet(path)
-    finally:
-        # scope the dynamic mode to THIS write: leaking it session-wide
-        # silently turns later full-refresh overwrites into partial ones
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    # dynamic mode as a writer option, scoped to THIS write: flipping
+    # the session conf would leak into writes on other threads, turning
+    # their full-refresh overwrites into partial ones
+    with _writer_lock(path):
+        (df.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+         .partitionBy(*key_cols).parquet(path))
 
 
 def staged_swap(df: DataFrame, path: str) -> None:

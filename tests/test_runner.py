@@ -4,9 +4,16 @@ run ledger as the metadata record."""
 
 from __future__ import annotations
 
+import threading
+
 import pytest
 
-from pitlapetl_spark.plans.runner import JOB_MANIFEST, run_pipeline
+from pitlapetl_spark.plans.runner import (
+    JOB_MANIFEST,
+    JobSpec,
+    PipelineFailure,
+    run_pipeline,
+)
 from pitlapetl_spark.registry import QUERIES, load_all
 from tests.conftest import SF_SMOKE
 
@@ -58,8 +65,16 @@ def test_flaky_job_retries_and_other_jobs_unaffected(spark, tmp_path):
     fns["job_schedule"] = flaky
     fns["job_driver_standings"] = dead
 
-    with pytest.raises(RuntimeError, match="driver_standings"):
+    with pytest.raises(PipelineFailure, match="driver_standings") as failure:
         run_pipeline(spark, SF_SMOKE, out, query_fns=fns)
+    # records come back in manifest order, each job's attempts in order,
+    # however the concurrent jobs happened to finish
+    retried = {"schedule", "driver_standings"}
+    assert [(r.job, r.attempt) for r in failure.value.records] == [
+        (spec.name, a)
+        for spec in JOB_MANIFEST
+        for a in ((1, 2) if spec.name in retried else (1,))
+    ]
 
     ledger = {
         (r.job, r.attempt): r.status
@@ -83,6 +98,78 @@ def test_zero_max_attempts_fails_loudly(spark, tmp_path):
     runner must reject it instead of recording a successful no-op."""
     with pytest.raises(ValueError, match="max_attempts"):
         run_pipeline(spark, SF_SMOKE, str(tmp_path / "wh"), max_attempts=0)
+
+
+def test_duplicate_job_names_rejected_before_any_job_runs(spark, tmp_path):
+    """Two concurrent jobs writing one table would race for its writer
+    lease; the runner must refuse the manifest before anything runs."""
+    out = tmp_path / "wh"
+    ran = []
+
+    def fn(spark_, sf_dir):
+        ran.append(True)
+        return spark_.range(1)
+
+    jobs = (JobSpec("t", "q", "overwrite"), JobSpec("t", "q", "overwrite"))
+    with pytest.raises(ValueError, match="duplicate JobSpec names"):
+        run_pipeline(spark, SF_SMOKE, str(out), jobs=jobs, query_fns={"q": fn})
+    assert not ran
+    assert not out.exists()
+
+
+def test_jobs_run_concurrently(spark, tmp_path):
+    """Two jobs that each wait for the other before returning their
+    frame can only both succeed if the tick runs them side by side; a
+    serial sweep breaks the barrier and the tick fails."""
+    barrier = threading.Barrier(2, timeout=60)
+
+    def meet(spark_, sf_dir):
+        barrier.wait()
+        return spark_.range(3)
+
+    jobs = (JobSpec("left", "left_q", "overwrite"),
+            JobSpec("right", "right_q", "overwrite"))
+    records = run_pipeline(spark, SF_SMOKE, str(tmp_path / "wh"), jobs=jobs,
+                           max_attempts=1, query_fns={"left_q": meet, "right_q": meet})
+    assert [(r.job, r.status, r.rows) for r in records] == [
+        ("left", "ok", 3), ("right", "ok", 3)]
+
+
+def test_worker_threads_keep_callers_job_group(spark, tmp_path):
+    """A job group the caller set must reach the jobs the worker
+    threads launch, or ``sc.cancelJobGroup`` could not cancel a tick."""
+    sc = spark.sparkContext
+    group = "runner-tick-group"
+    sc.setJobGroup(group, "one tick")
+    try:
+        run_pipeline(spark, SF_SMOKE, str(tmp_path / "wh"),
+                     jobs=(JobSpec("t", "q", "overwrite"),),
+                     query_fns={"q": lambda spark_, sf_dir: spark_.range(5)})
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description",
+                     "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(prop, None)
+    assert sc.statusTracker().getJobIdsForGroup(group)
+
+
+def test_ledger_schema_and_hidden_partial_file(spark, tmp_path):
+    """The pyarrow-written ledger keeps the Spark-facing schema, and a
+    leftover hidden partial file from a crashed write is skipped."""
+    out = str(tmp_path / "wh")
+    jobs = (JobSpec("t", "q", "overwrite"),)
+    fns = {"q": lambda spark_, sf_dir: spark_.range(2)}
+    run_pipeline(spark, SF_SMOKE, out, jobs=jobs, query_fns=fns)
+    ledger_dir = f"{out}/_run_ledger"
+    with open(f"{ledger_dir}/.part-0-crashed.parquet", "wb") as fh:
+        fh.write(b"PAR1 half-written")
+    run_pipeline(spark, SF_SMOKE, out, jobs=jobs, query_fns=fns)
+    ledger = spark.read.parquet(ledger_dir)
+    assert ledger.schema.simpleString() == (
+        "struct<job:string,attempt:int,status:string,rows:bigint,"
+        "seconds:double,error:string>"
+    )
+    assert [tuple(r) for r in ledger.select("job", "attempt", "status", "rows").collect()] == [
+        ("t", 1, "ok", 2)] * 2
 
 
 def test_backfill_catchup_skips_existing_days(spark, tmp_path):

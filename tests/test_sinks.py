@@ -49,6 +49,17 @@ def test_upsert_touches_only_its_partitions(spark, sf_dir):
     assert after.filter((F.col("event_type") != "click") & (F.col("n") == -1)).count() == 0
 
 
+def test_upsert_leaves_session_conf_unchanged(spark, sf_dir):
+    """Dynamic partition overwrite is scoped to the upsert's own write;
+    flipping the session conf would leak into writes on other threads."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(key)
+    events = load_table(spark, sf_dir, "events")
+    agg = events.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
+    upsert_partitioned(agg, tempfile.mkdtemp(prefix="pitlap_t_") + "/t", ["event_type"])
+    assert spark.conf.get(key) == before
+
+
 def test_overwrite_full_refresh(spark, sf_dir):
     events = load_table(spark, sf_dir, "events")
     path = tempfile.mkdtemp(prefix="pitlap_t_") + "/t"
