@@ -2,10 +2,23 @@
 
 The reference achieves freshness by re-running a DAG and leaning on
 upsert idempotency (K1) or truncate-reload (K3). Here the same
-pipelines run *incrementally*: file-stream source over the events
-table -> watermarked windowed aggregation (the exact groupBy bodies
-proven against DuckDB in batch_windows.py) -> ``foreachBatch`` keyed
-upsert reproducing K1 semantics per micro-batch.
+pipelines run *incrementally*: file-stream sources -> watermarked
+windowed / stateful operators (the exact groupBy bodies proven against
+DuckDB in batch_windows.py) -> ``foreachBatch`` sinks, every one
+started by ``_foreach_batch`` with the availableNow trigger. Two sink
+families:
+
+- MERGE sinks (``run_upsert_sink``, ``run_upsert_sink_scoped``,
+  ``run_cdc_sink``) reproduce K1 per micro-batch: each batch MERGEs
+  into the target table (sinks.merge_upsert_write and friends), so
+  batch and streaming loads are interchangeable and replay-idempotent.
+- Batch-scoped store sinks: the five crawl-ingest dedup sinks
+  (minhash, pHash, semantic, URL, span) and the seven additive monitor
+  sinks (CMS, CUSUM, PSI, k-anonymity, histogram, OOV, SPRT) write one
+  ``batch=<id>`` partition per micro-batch and are replay-safe by the
+  protocol ``_BatchStore`` owns (its docstring states it once); the
+  monitor sinks are one ``_monitor_sink`` call each, their readers one
+  ``_fold_partials`` fold each.
 
 Scale design: the file source lists + processes new files per trigger
 (maxFilesPerTrigger bounds batch size); watermarks bound state — rows
@@ -14,10 +27,7 @@ watermark are filtered at batch start, so state never grows forever.
 (Spark's drop is best-effort *within* a batch: the watermark used by
 batch N is the one committed by batch N-1, so a straggler landing in
 the same batch that advances the watermark may still aggregate —
-tests/test_streaming.py pins both sides of this contract.) The
-foreachBatch upsert MERGEs each micro-batch into the target table
-(sinks.merge_upsert_write), so batch and streaming loads are
-interchangeable and replay-idempotent.
+tests/test_streaming.py pins both sides of this contract.)
 """
 
 from __future__ import annotations
@@ -341,6 +351,21 @@ def run_to_memory(
     )
 
 
+def _foreach_batch(
+    df: DataFrame, body, checkpoint: str, output_mode: str
+) -> StreamingQuery:
+    """Start ``body(batch_df, batch_id)`` as a checkpointed
+    availableNow foreachBatch query — the one launch every sink in
+    this module shares."""
+    return (
+        df.writeStream.foreachBatch(body)
+        .outputMode(output_mode)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
 def run_upsert_sink(
     df: DataFrame,
     path: str,
@@ -386,13 +411,7 @@ def _merge_stream(df: DataFrame, checkpoint: str, merge_batch) -> StreamingQuery
         finally:
             batch_df.unpersist()
 
-    return (
-        df.writeStream.foreachBatch(write_batch)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _foreach_batch(df, write_batch, checkpoint, "update")
 
 
 def run_upsert_sink_scoped(
@@ -474,8 +493,7 @@ def _compact_partition_store(
     leaf-directory read sees no ``batch`` partition column, so the
     full row IS the payload identity. Readers that fold the store
     from its ROOT (where partition discovery adds ``batch``) instead
-    dedup on the src_batch provenance key — see ``read_histogram`` /
-    ``read_oov_rate``.
+    dedup on the src_batch provenance key — ``_fold_partials``.
     A crash mid-write leaves a marker-less generation dir that the
     retry simply overwrites from the still-present sources. On an
     object store, swap the directory delete for the committer-based
@@ -569,20 +587,6 @@ def _parallel_writes(*thunks) -> None:
         raise errs[0]
 
 
-def _cached_schema_read(spark, path: str, box: dict) -> DataFrame:
-    """Per-sink-instance store read with the parquet schema inferred
-    ONCE and reused for every later micro-batch (the store schema is
-    fixed by the sink's own writes): skips the per-batch footer
-    sampling + schema merge, driver work that grows with the store's
-    partition count. The ``batch`` partition column stays inferred
-    from the directory layout either way."""
-    if path in box:
-        return spark.read.schema(box[path]).parquet(path)
-    df = spark.read.parquet(path)
-    box[path] = df.schema
-    return df
-
-
 def _with_src_batch(df):
     """Ensure the row-level provenance column on a store read, with
     the one-time legacy migration the sink docstrings promise.
@@ -601,22 +605,131 @@ def _with_src_batch(df):
       self-match everything (estimate 1.0 / hamming 0 / cosine 1.0),
       overwriting the corpus partition empty — the exact bug the
       provenance column closed (ADVICE r11). These rows are stamped
-      NULL (= origin unknown) instead; the three pre-provenance-era
-      probes (minhash / pHash / semantic) admit NULL rows under the
-      pre-provenance SELF-KEY guard (``store.key != batch.key``),
-      which restores the old semantics for old rows: self-rows are
-      excluded exactly, but rows that originally arrived LATER than
-      the replayed batch are visible on reprocess (the documented
-      pre-provenance inexactness) until the store is rewritten with
-      real provenance. Sinks born WITH provenance (URL, span) never
-      have legacy generations; their probes drop NULL rows outright
-      (the ``src_batch < current`` conjunct is null-rejecting)."""
+      NULL (= origin unknown) instead, probed under the legacy guard
+      ``_BatchStore`` describes: self-rows are excluded exactly, but
+      rows that originally arrived LATER than the replayed batch are
+      visible on reprocess (the documented pre-provenance inexactness)
+      until the store is rewritten with real provenance."""
     if "src_batch" in df.columns:
         return df
     return df.withColumn(
         "src_batch",
         F.when(F.col("batch") >= 0, F.col("batch")).cast("long"),
     )
+
+
+class _BatchStore:
+    """One batch-scoped store — the replay-safe protocol every
+    foreachBatch ingest and monitor sink in this module shares
+    (SURVEY.md §2.12: freshness without re-running, exactly-once
+    without a transactional table format).
+
+    - Layout: each micro-batch writes its rows to ``<root>/batch=<id>``
+      with overwrite semantics (``write``). A replayed batch — one
+      whose commit is missing from the checkpoint, crashed at any
+      point between its writes — rewrites its own directories to the
+      first run's result instead of append-duplicating. Additive
+      state (sketch cells, moments, counts) cannot be idempotently
+      re-added; the overwrite is what makes it replay-safe.
+    - Stamp: every store row carries its ORIGIN batch id as the
+      ``src_batch`` data column, stamped by ``write`` and preserved
+      verbatim through generation folds.
+    - Probe filter: ``earlier`` admits only earlier-arrived rows,
+      ``batch < id AND (src_batch < id OR src_batch IS NULL)``. The
+      partition conjunct prunes whole directories; the row conjunct is
+      the exact contract. A generation partition (negative ``batch``)
+      passes the partition filter unconditionally and may hold the
+      replayed batch's own rows (which would self-match and overwrite
+      the corpus partition empty) and rows that originally arrived
+      LATER (which would make a fresh-checkpoint reprocess drop what
+      the first run kept). Filtering on the row's origin excludes
+      exactly the rows the first run never saw, so a single-batch
+      replay or a from-scratch reprocess against a folded store
+      recomputes the first run's output bit-exactly.
+    - Legacy NULL-origin guard: stores persisted before ``src_batch``
+      existed are migrated on read (``_with_src_batch``); legacy
+      generation rows, whose origin is unrecoverable, read NULL and
+      pass the filter. The minhash, pHash and semantic probes admit
+      them only under the pre-provenance self-key guard
+      (``store.key != batch.key``); the URL and span sinks, born with
+      provenance, drop them.
+    - Compaction: ``fold`` folds committed partitions into a
+      generation once ``compact_every`` accumulate
+      (``_compact_partition_store``: write-then-delete, replay-safe
+      because a folded batch is checkpoint-committed and never
+      replayed). Sinks fold BEFORE probing, so a batch's probe scans
+      the compacted layout.
+    - Read dedup: additive readers fold the store from its root with
+      ``_fold_partials``, which dedups on ``(src_batch, *grain)`` so a
+      partial exposed twice — the crash window between a generation
+      write and its source delete, or a reader mid-compaction — is
+      counted once.
+
+    ``earlier`` is existence-checked-then-strict: a missing store
+    reads None, while a read failure on an existing store raises
+    instead of silently bootstrapping a dedup-free batch. The parquet
+    schema is inferred once per instance and reused, skipping the
+    per-batch footer sampling that grows with the partition count —
+    but only once it contains ``src_batch``: a schema cached from a
+    pre-provenance store would drop the real ``src_batch`` of every
+    later write and fold, stamping folded rows NULL indefinitely."""
+
+    def __init__(self, root: str, compact_every: int):
+        self.root = root
+        self.compact_every = compact_every
+        self._schema = None
+
+    def fold(self, spark: SparkSession, batch_id: int) -> None:
+        _compact_partition_store(spark, self.root, batch_id, self.compact_every)
+
+    def earlier(self, spark: SparkSession, batch_id: int) -> DataFrame | None:
+        import os as _os
+
+        if not _os.path.exists(self.root):
+            return None
+        if self._schema is not None:
+            df = spark.read.schema(self._schema).parquet(self.root)
+        else:
+            df = spark.read.parquet(self.root)
+            if "src_batch" in df.columns:
+                self._schema = df.schema
+        return _with_src_batch(df).filter(
+            (F.col("batch") < batch_id)
+            & ((F.col("src_batch") < batch_id) | F.col("src_batch").isNull())
+        )
+
+    def write(self, df: DataFrame, batch_id: int) -> None:
+        df.withColumn("src_batch", F.lit(batch_id)).write.mode(
+            "overwrite"
+        ).parquet(f"{self.root}/batch={batch_id}")
+
+
+def _monitor_sink(
+    df: DataFrame, root: str, checkpoint: str, compact_every: int, partial
+) -> StreamingQuery:
+    """Start an additive monitor sink: every non-empty micro-batch
+    writes ``partial(batch_df)`` — its sufficient statistics, one
+    file — to the batch-scoped store at ``root`` (``_BatchStore``);
+    the sink's reader folds the partials with ``_fold_partials``."""
+    store = _BatchStore(root, compact_every)
+
+    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
+        if batch_df.isEmpty():
+            return
+        store.fold(batch_df.sparkSession, batch_id)
+        store.write(partial(batch_df).coalesce(1), batch_id)
+
+    return _foreach_batch(df, write_batch, checkpoint, "update")
+
+
+def _fold_partials(spark: SparkSession, root: str, grain: list[str]) -> DataFrame:
+    """Read a monitor store's partials, each once: dedup on the
+    ``(src_batch, *grain)`` provenance key (``_BatchStore``'s read
+    dedup). The key, not the full row, because this read is from the
+    store ROOT, where partition discovery adds a ``batch`` column that
+    DIFFERS between a partial's generation copy and its leftover
+    source copy."""
+    return spark.read.parquet(root).dropDuplicates(["src_batch", *grain])
 
 
 # --------------------------- corpus-sized quantizer (SemDeDup K rule)
@@ -929,25 +1042,14 @@ def _dedup_ingest_batch(
 ):
     """Build the per-micro-batch body of the minhash ingest sink
     (run_dedup_ingest_sink's docstring). Exposed as a factory —
-    the same device as _semantic_ingest_batch / _url_ingest_batch /
-    _span_ingest_batch — so the composed crawl-ingest pipeline
+    like the other four ingest bodies — so the composed crawl-ingest pipeline
     parity query can drive the EXACT production code path with
     deterministic id-ordered batches, while the streaming wrapper
     hands the same function to foreachBatch."""
-    import os as _os
-
     from ..operators.dedup import N_HASHES, _band_rows, minhash_signatures
 
-    _schemas: dict = {}
-
-    def _read_if_exists(spark, path):
-        # None only when the store genuinely does not exist yet; an
-        # existing-but-unreadable store must raise, not bypass dedup
-        return (
-            _cached_schema_read(spark, path, _schemas)
-            if _os.path.exists(path)
-            else None
-        )
+    sigs = _BatchStore(store_path, compact_every)
+    band_store = _BatchStore(f"{store_path}_bands", compact_every)
 
     def _est(left_prefix: str, right_prefix: str):
         return sum(
@@ -961,14 +1063,8 @@ def _dedup_ingest_batch(
         if batch_df.isEmpty():
             return
         spark = batch_df.sparkSession
-        # fold committed store partitions first, so THIS batch's probe
-        # already scans the compacted layout (full-row dedup heals any
-        # duplicate rows a crash between compaction write and source
-        # delete left behind, without collapsing a legitimately
-        # re-delivered doc_id whose payload differs — ADVICE r8)
-        bands_path = f"{store_path}_bands"
-        _compact_partition_store(spark, store_path, batch_id, compact_every)
-        _compact_partition_store(spark, bands_path, batch_id, compact_every)
+        sigs.fold(spark, batch_id)
+        band_store.fold(spark, batch_id)
         # lazy lineage cuts (each frame has 2+ consumers): the frames
         # materialize once inside their first consumer's job instead
         # of as three separate eager jobs per micro-batch
@@ -1012,52 +1108,21 @@ def _dedup_ingest_batch(
         )
         sig_kept = sig.join(in_dups, "doc_id", "left_anti")
 
-        # (c) probe the persisted band table — band values were
-        # computed once at append time, nothing store-side re-hashes
-        store = _read_if_exists(spark, store_path)
-        if store is not None:
-            # earlier-arrived ROWS only: on a replay the store
-            # already holds the batch's prior output, and dedup
-            # against itself would empty `survivors` — the overwrite
-            # below would then erase the batch instead of converging.
-            # The partition filter (batch < current) prunes whole
-            # directories; the row filter (src_batch < current) is
-            # the exact contract — inside a folded generation
-            # (batch = -g, always < current) it excludes the
-            # replayed batch's own rows AND later-arrived rows, so a
-            # fresh-checkpoint reprocess sees exactly the first
-            # run's view (docstring).
-            # NULL src_batch = legacy generation row of unknown
-            # origin (_with_src_batch): admitted, but only under the
-            # pre-provenance self-key guard in the pair join below
-            store = _with_src_batch(store).filter(
-                (F.col("batch") < batch_id)
-                & (
-                    (F.col("src_batch") < batch_id)
-                    | F.col("src_batch").isNull()
-                )
-            )
+        # (c) probe the persisted band table's earlier-arrived rows
+        # (_BatchStore) — band values were computed once at append
+        # time, nothing store-side re-hashes
+        store = sigs.earlier(spark, batch_id)
         if store is None:
             survivors = sig_kept.select("doc_id")
         else:
-            store_bands = _with_src_batch(
-                _cached_schema_read(spark, bands_path, _schemas)
-            ).filter(
-                (F.col("batch") < batch_id)
-                & (
-                    (F.col("src_batch") < batch_id)
-                    | F.col("src_batch").isNull()
-                )
-            )
+            store_bands = band_store.earlier(spark, batch_id)
             cand = (
                 store_bands.alias("c")
                 .join(
                     F.broadcast(bands.alias("x")),
                     (F.col("c.band_idx") == F.col("x.band_idx"))
                     & (F.col("c.band_val") == F.col("x.band_val"))
-                    # legacy rows (origin unknown) get the
-                    # pre-provenance self-key guard instead of the
-                    # provenance filter (_with_src_batch docstring)
+                    # NULL-origin legacy rows: self-key guard
                     & (
                         F.col("c.src_batch").isNotNull()
                         | (F.col("c.doc_id") != F.col("x.doc_id"))
@@ -1098,28 +1163,19 @@ def _dedup_ingest_batch(
             )
         keep = F.broadcast(survivors.localCheckpoint(eager=True))
 
-        # (d) batch-scoped overwrite writes: replay-idempotent at any
-        # crash point in any order, and independent given `keep`
+        # (d) batch-scoped overwrite writes: independent given `keep`
         # (eager) plus the batch/sig/bands lazy checkpoints, all
         # already materialized inside the survivors job — run the
-        # three concurrently. Store rows carry their origin batch id
-        # (src_batch) so the probe's row-level provenance filter
-        # survives generation folds (docstring); the corpus needs no
-        # stamp — it is never probed and its batch layout is already
-        # the directory name
-        sub = f"batch={batch_id}"
+        # three concurrently. The corpus needs no stamp: it is never
+        # probed and its batch layout is already the directory name
         _parallel_writes(
             lambda: batch.join(keep, "doc_id", "left_semi")
             .write.mode("overwrite")
-            .parquet(f"{corpus_path}/{sub}"),
-            lambda: sig.join(keep, "doc_id", "left_semi")
-            .withColumn("src_batch", F.lit(batch_id))
-            .write.mode("overwrite")
-            .parquet(f"{store_path}/{sub}"),
-            lambda: bands.join(keep, "doc_id", "left_semi")
-            .withColumn("src_batch", F.lit(batch_id))
-            .write.mode("overwrite")
-            .parquet(f"{bands_path}/{sub}"),
+            .parquet(f"{corpus_path}/batch={batch_id}"),
+            lambda: sigs.write(sig.join(keep, "doc_id", "left_semi"), batch_id),
+            lambda: band_store.write(
+                bands.join(keep, "doc_id", "left_semi"), batch_id
+            ),
         )
 
     return ingest_batch
@@ -1152,68 +1208,118 @@ def run_dedup_ingest_sink(
     KV store would cut those scans to O(collisions), which is the
     stated migration path at corpus sizes where the scans dominate.
 
-    Exactly-once: every output (corpus rows, signatures, bands) is
-    written to a batch-scoped partition directory
-    (``<path>/batch=<id>``) with overwrite semantics, and every store
-    read admits only EARLIER-ARRIVED partitions (``batch < current``;
-    generations are negative, so always earlier) — so a replayed
-    batch (including one that crashed BETWEEN the three writes)
-    recomputes against exactly what its first run saw and overwrites
-    its own directories to the first run's exact result, instead of
-    append-duplicating or self-matching to empty (the previous append-based design documented a
-    self-healing property that did not survive a crash between the
-    corpus and store appends). Every store row additionally carries
-    its ORIGIN batch id as a ``src_batch`` data column — stamped at
-    write time and preserved verbatim through generation folds — and
-    the probe filters ``src_batch < current`` alongside the
-    partition filter (the partition filter stays purely for
-    pruning): a generation partition (negative ``batch``) may hold
-    rows from ANY folded batch, including the replayed batch's own
-    rows (fresh-checkpoint reprocess against a retained, compacted
-    store — the disaster-recovery path) and rows that originally
-    arrived LATER, and the row-level provenance filter excludes
-    exactly the rows the first run never saw — so a full
-    from-scratch reprocess against a FOLDED store reproduces the
-    first run's output bit-exactly (regression-tested in
-    test_streaming; the semantic sink's reprocess test demonstrates
-    the later-arrival divergence the filter closes). This subsumes
-    the round-10 same-doc_id probe guard, which over-excluded: a
-    legitimately re-delivered doc_id with edited text (the
-    recurrence ``_compact_partition_store``'s docstring calls
-    legitimate) was never compared to its own earlier version
-    (ADVICE r10); under the provenance filter it dedups like any
-    other earlier-arrived row. Stores persisted before the src_batch
-    column existed are migrated ON READ (``_with_src_batch``):
-    uncompacted legacy partitions get their true origin stamped;
-    legacy GENERATION rows (origin unrecoverable) are stamped NULL
-    and probed under the pre-provenance self-key guard — exact
-    self-exclusion, but reprocess-vs-first-run exactness for those
-    rows only returns once the store is rewritten with real
-    provenance (the _with_src_batch docstring, ADVICE r11). The store
-    read is existence-checked-then-strict: a transient READ failure
-    on an existing store raises instead of silently bootstrapping a
-    dedup-free batch.
+    Exactly-once: the signature and band stores follow the
+    batch-scoped store protocol (``_BatchStore``), and the corpus is
+    written batch-scoped with overwrite too, so a replay that crashed
+    BETWEEN the three writes converges to the first run's result (the
+    previous append-based design documented a self-healing property
+    that did not survive a crash between the corpus and store
+    appends). The row-level provenance filter subsumes the round-10
+    same-doc_id probe guard, which over-excluded: a legitimately
+    re-delivered doc_id with edited text (the recurrence
+    ``_compact_partition_store``'s docstring calls legitimate) was
+    never compared to its own earlier version (ADVICE r10); now it
+    dedups like any other earlier-arrived row.
 
-    Store growth: the signature and band stores gain one partition per
-    batch; once ``compact_every`` committed partitions accumulate they
-    are folded into a negative-id generation partition
-    (``_compact_partition_store`` — write-then-delete, replay-safe
-    because folded batches are checkpoint-committed and can never be
-    replayed). The CORPUS is deliberately left un-compacted: its
-    batch layout is a downstream consumer contract, and it is never
-    scanned by the ingest path."""
-    return (
-        docs.writeStream.foreachBatch(
-            _dedup_ingest_batch(store_path, corpus_path, compact_every)
-        )
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    Store growth: the signature and band stores gain one partition
+    per batch and fold into generations every ``compact_every``. The
+    CORPUS is deliberately left un-compacted: its batch layout is a
+    downstream consumer contract, and it is never scanned by the
+    ingest path."""
+    return _foreach_batch(
+        docs,
+        _dedup_ingest_batch(store_path, corpus_path, compact_every),
+        checkpoint,
+        "append",
     )
 
 
 # -------------------------------------- media phash ingest sink
+
+
+def _phash_ingest_batch(
+    store_path: str,
+    corpus_path: str,
+    compact_every: int = DEDUP_INGEST_COMPACT_EVERY,
+):
+    """Build the per-micro-batch body of the media pHash ingest sink
+    (run_media_phash_ingest_sink's docstring) — a factory like
+    _dedup_ingest_batch, so a caller can drive the production body
+    with deterministic id-ordered batches."""
+    from ..operators.multimodal import (
+        PHASH_HAM_MAX,
+        phash_band_rows,
+        phash_frame,
+    )
+
+    store = _BatchStore(store_path, compact_every)
+
+    def ham(a, b):
+        return F.bit_count(a.bitwiseXOR(b))
+
+    def ingest_batch(batch_df: DataFrame, batch_id: int) -> None:
+        if batch_df.isEmpty():
+            return
+        spark = batch_df.sparkSession
+        store.fold(spark, batch_id)
+        batch = batch_df.localCheckpoint(eager=True)
+        bands = phash_band_rows(
+            phash_frame(batch.select("doc_id", "text"))
+        ).localCheckpoint(eager=True)
+
+        # (b) intra-batch dedup
+        a, b = bands.alias("a"), bands.alias("b")
+        in_dups = (
+            a.join(
+                b,
+                (F.col("a.band_id") == F.col("b.band_id"))
+                & (F.col("a.band_val") == F.col("b.band_val"))
+                & (F.col("a.doc_id") < F.col("b.doc_id")),
+            )
+            .filter(ham(F.col("a.phash"), F.col("b.phash")) <= PHASH_HAM_MAX)
+            .select(F.col("b.doc_id").alias("doc_id"))
+            .distinct()
+        )
+        kept = bands.join(in_dups, "doc_id", "left_anti")
+
+        # (c) probe the persisted band store's earlier-arrived rows
+        # (_BatchStore): the replayed batch's own rows would
+        # hamming-match themselves at distance 0 and empty the corpus
+        # partition
+        earlier = store.earlier(spark, batch_id)
+        if earlier is not None:
+            dups = (
+                earlier.alias("c")
+                .join(
+                    F.broadcast(kept.alias("x")),
+                    (F.col("c.band_id") == F.col("x.band_id"))
+                    & (F.col("c.band_val") == F.col("x.band_val"))
+                    # NULL-origin legacy rows: self-key guard
+                    & (
+                        F.col("c.src_batch").isNotNull()
+                        | (F.col("c.doc_id") != F.col("x.doc_id"))
+                    ),
+                )
+                .filter(
+                    ham(F.col("c.phash"), F.col("x.phash")) <= PHASH_HAM_MAX
+                )
+                .select(F.col("x.doc_id").alias("doc_id"))
+                .distinct()
+            )
+            survivors = kept.select("doc_id").distinct().join(
+                dups, "doc_id", "left_anti"
+            )
+        else:
+            survivors = kept.select("doc_id").distinct()
+        keep = F.broadcast(survivors.localCheckpoint(eager=True))
+
+        # (d) batch-scoped overwrite writes: replay-idempotent
+        batch.join(keep, "doc_id", "left_semi").write.mode("overwrite").parquet(
+            f"{corpus_path}/batch={batch_id}"
+        )
+        store.write(bands.join(keep, "doc_id", "left_semi"), batch_id)
+
+    return ingest_batch
 
 
 def run_media_phash_ingest_sink(
@@ -1236,120 +1342,17 @@ def run_media_phash_ingest_sink(
     is no separate signature table — the verify join reads the same
     store rows the candidate join matched.
 
-    Exactly-once: the minhash sink's device verbatim — batch-scoped
-    overwrite partitions (``batch=<id>``), store reads admit only
-    earlier-arrived ROWS (partition filter ``batch < current`` for
-    pruning, row-level ``src_batch < current`` provenance for
-    exactness through generation folds; see the minhash sink's
-    docstring), so a replay at ANY crash point — including a full
-    fresh-checkpoint reprocess against a folded store — recomputes
-    exactly what the first run saw and overwrites to the first
-    run's exact result. Per-batch cost: O(batch) hashing + one band-store
-    scan (equi-join on the precomputed band key); the same
-    bucket-pruning / KV migration noted on the minhash sink applies
-    when the store scan dominates. The BAND store's committed
-    partitions fold into generation partitions via
-    ``_compact_partition_store`` once ``compact_every`` accumulate
-    (same store shape and replay/crash analysis as the minhash sink —
-    VERDICT r8 item 5); the corpus stays un-compacted for the same
-    consumer-contract reason."""
-    import os as _os
-
-    from ..operators.multimodal import (
-        PHASH_HAM_MAX,
-        phash_band_rows,
-        phash_frame,
-    )
-
-    def ingest_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        _compact_partition_store(spark, store_path, batch_id, compact_every)
-        batch = batch_df.localCheckpoint(eager=True)
-        bands = phash_band_rows(
-            phash_frame(batch.select("doc_id", "text"))
-        ).localCheckpoint(eager=True)
-
-        def ham(a, b):
-            return F.bit_count(a.bitwiseXOR(b))
-
-        # (b) intra-batch dedup
-        a, b = bands.alias("a"), bands.alias("b")
-        in_dups = (
-            a.join(
-                b,
-                (F.col("a.band_id") == F.col("b.band_id"))
-                & (F.col("a.band_val") == F.col("b.band_val"))
-                & (F.col("a.doc_id") < F.col("b.doc_id")),
-            )
-            .filter(ham(F.col("a.phash"), F.col("b.phash")) <= PHASH_HAM_MAX)
-            .select(F.col("b.doc_id").alias("doc_id"))
-            .distinct()
-        )
-        kept = bands.join(in_dups, "doc_id", "left_anti")
-
-        # (c) probe the persisted band store — earlier-arrived ROWS
-        # only: the partition filter (batch < current) prunes whole
-        # directories, and the row-level provenance filter
-        # (src_batch < current) makes reprocess-after-compaction
-        # exact — inside a folded generation it excludes both the
-        # replayed batch's own rows (which would hamming-match
-        # themselves at distance 0 and empty the corpus partition)
-        # and later-arrived rows the first run never saw (the
-        # minhash sink's docstring analysis, identical here)
-        if _os.path.exists(store_path):
-            # NULL src_batch = legacy generation row (origin
-            # unknown): admitted under the pre-provenance self-key
-            # guard in the join below (_with_src_batch docstring)
-            store = _with_src_batch(
-                spark.read.parquet(store_path)
-            ).filter(
-                (F.col("batch") < batch_id)
-                & (
-                    (F.col("src_batch") < batch_id)
-                    | F.col("src_batch").isNull()
-                )
-            )
-            dups = (
-                store.alias("c")
-                .join(
-                    F.broadcast(kept.alias("x")),
-                    (F.col("c.band_id") == F.col("x.band_id"))
-                    & (F.col("c.band_val") == F.col("x.band_val"))
-                    & (
-                        F.col("c.src_batch").isNotNull()
-                        | (F.col("c.doc_id") != F.col("x.doc_id"))
-                    ),
-                )
-                .filter(
-                    ham(F.col("c.phash"), F.col("x.phash")) <= PHASH_HAM_MAX
-                )
-                .select(F.col("x.doc_id").alias("doc_id"))
-                .distinct()
-            )
-            survivors = kept.select("doc_id").distinct().join(
-                dups, "doc_id", "left_anti"
-            )
-        else:
-            survivors = kept.select("doc_id").distinct()
-        keep = F.broadcast(survivors.localCheckpoint(eager=True))
-
-        # (d) batch-scoped overwrite writes: replay-idempotent
-        sub = f"batch={batch_id}"
-        batch.join(keep, "doc_id", "left_semi").write.mode("overwrite").parquet(
-            f"{corpus_path}/{sub}"
-        )
-        bands.join(keep, "doc_id", "left_semi").withColumn(
-            "src_batch", F.lit(batch_id)
-        ).write.mode("overwrite").parquet(f"{store_path}/{sub}")
-
-    return (
-        docs.writeStream.foreachBatch(ingest_batch)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    Exactly-once and growth: the band store follows the batch-scoped
+    store protocol (``_BatchStore``), the corpus stays un-compacted for
+    the minhash sink's consumer-contract reason. Per-batch cost:
+    O(batch) hashing + one band-store scan (equi-join on the
+    precomputed band key); the same bucket-pruning / KV migration
+    noted on the minhash sink applies when the store scan dominates."""
+    return _foreach_batch(
+        docs,
+        _phash_ingest_batch(store_path, corpus_path, compact_every),
+        checkpoint,
+        "append",
     )
 
 
@@ -1397,11 +1400,9 @@ def run_media_phash_ingest_sink(
 # never shuffled; no candidate pair ever becomes a JVM row (the old
 # plan's per-pair wide rows + pre-score dropDuplicates exchange were
 # the measured per-batch wall, OPTIMIZATION_r12.md).
-# The store gains one partition per batch and folds into generation
-# partitions via _compact_partition_store once compact_every commit
-# (same write-then-delete, replay-safe analysis as the other two
-# sinks); the corpus stays un-compacted for the same consumer-
-# contract reason.
+# The store follows the batch-scoped store protocol (_BatchStore); the
+# corpus stays un-compacted for the minhash sink's consumer-contract
+# reason.
 
 
 def read_embeddings_stream(
@@ -1508,8 +1509,6 @@ def _semantic_ingest_batch(
     None keeps the frozen-quantizer contract exactly (the registered
     parity query's mode); the two modes share one store schema but a
     given store should run under one mode for its lifetime."""
-    import os as _os
-
     from ..operators.similarity import (
         SEMDEDUP_TAU,
         cluster_pair_scores,
@@ -1523,13 +1522,13 @@ def _semantic_ingest_batch(
         )
     cent = centroids.localCheckpoint(eager=True)
     k_cache: dict = {}
-    _schemas: dict = {}
+    store = _BatchStore(store_path, compact_every)
 
     def ingest_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
         spark = batch_df.sparkSession
-        _compact_partition_store(spark, store_path, batch_id, compact_every)
+        store.fold(spark, batch_id)
         active = (
             _maybe_requantize(
                 spark,
@@ -1577,41 +1576,18 @@ def _semantic_ingest_batch(
             .distinct()
         )
 
-        # cross-batch: probe the store's EARLIER-ARRIVED rows only,
-        # kept and dropped alike — precedence is arrival order, so a
-        # replay of batch N reads exactly what the first run read
-        # even when later batches' partitions already exist. The
-        # partition filter (batch < current) prunes whole
-        # directories; the row-level provenance filter
-        # (src_batch < current) is the exact contract: a folded
-        # generation partition is negative, passes the partition
-        # filter unconditionally, and may hold BOTH the replayed
-        # batch's own rows (which would pair with themselves at
-        # cosine 1.0 and overwrite the corpus partition EMPTY —
-        # round-10 review catch) and rows that originally arrived
-        # LATER (which would make a disaster-recovery from-scratch
-        # reprocess drop vectors the first run kept). Filtering on
-        # the per-row origin batch id — stamped at write time,
-        # preserved through folds — excludes exactly the rows the
-        # first run never saw, so full reprocess against a folded
-        # store is bit-exact (regression-tested in test_streaming).
-        # The former same-vec_id guard is subsumed and its
-        # over-exclusion removed: a re-delivered vec_id now dedups
-        # against its own earlier version like any other
-        # earlier-arrived row (ADVICE r10).
-        if _os.path.exists(store_path):
-            # NULL src_batch = legacy generation row (origin
-            # unknown): admitted under the pre-provenance self-key
-            # guard in the join below (_with_src_batch docstring)
-            store = _with_src_batch(
-                _cached_schema_read(spark, store_path, _schemas)
-            ).filter(
-                (F.col("batch") < batch_id)
-                & (
-                    (F.col("src_batch") < batch_id)
-                    | F.col("src_batch").isNull()
-                )
-            )
+        # cross-batch: probe the store's EARLIER-ARRIVED rows only
+        # (_BatchStore), kept and dropped alike — precedence is
+        # arrival order. The replayed batch's own rows would pair
+        # with themselves at cosine 1.0 and overwrite the corpus
+        # partition EMPTY (round-10 review catch). The former
+        # same-vec_id guard is subsumed and its over-exclusion
+        # removed: a re-delivered vec_id now dedups against its own
+        # earlier version like any other earlier-arrived row (ADVICE
+        # r10); NULL-origin legacy rows keep the self-key guard inside
+        # _semantic_store_probe_fn.
+        earlier = store.earlier(spark, batch_id)
+        if earlier is not None:
             # one mapInArrow pass over the pruned store scan: each
             # store row is dotted against the batch's per-label
             # assignment matrices (closure-shipped — bounded by the
@@ -1619,7 +1595,7 @@ def _semantic_ingest_batch(
             # the store is never shuffled and no candidate pair
             # becomes a JVM row (_semantic_store_probe_fn)
             x_dups = (
-                store.select("vec_id", "label", "v", "nrm", "src_batch")
+                earlier.select("vec_id", "label", "v", "nrm", "src_batch")
                 .mapInArrow(
                     _semantic_store_probe_fn(
                         assign.collect(), SEMDEDUP_TAU
@@ -1638,29 +1614,24 @@ def _semantic_ingest_batch(
         # batch/assign/dropped checkpoints — run concurrently.
         # Corpus gets survivors only; the store gets EVERY
         # assignment row with the verdict flag.
-        sub = f"batch={batch_id}"
         _parallel_writes(
             lambda: batch.join(dropped, "vec_id", "left_anti")
             .write.mode("overwrite")
-            .parquet(f"{corpus_path}/{sub}"),
-            lambda: assign.join(
-                dropped.withColumn("is_dup", F.lit(True)),
-                "vec_id",
-                "left",
-            )
-            .select(
-                "vec_id",
-                "label",
-                "v",
-                "nrm",
-                F.coalesce(~F.col("is_dup"), F.lit(True)).alias("kept"),
-                # origin batch id: the probe's row-level provenance
-                # filter reads this through generation folds (block
-                # comment above)
-                F.lit(batch_id).alias("src_batch"),
-            )
-            .write.mode("overwrite")
-            .parquet(f"{store_path}/{sub}"),
+            .parquet(f"{corpus_path}/batch={batch_id}"),
+            lambda: store.write(
+                assign.join(
+                    dropped.withColumn("is_dup", F.lit(True)),
+                    "vec_id",
+                    "left",
+                ).select(
+                    "vec_id",
+                    "label",
+                    "v",
+                    "nrm",
+                    F.coalesce(~F.col("is_dup"), F.lit(True)).alias("kept"),
+                ),
+                batch_id,
+            ),
         )
 
     return ingest_batch
@@ -1683,20 +1654,17 @@ def run_semantic_ingest_sink(
     with generation compaction from day one. ``requantize_target``
     opts into the corpus-sized quantizer (_semantic_ingest_batch
     docstring); default None = frozen quantizer."""
-    return (
-        emb.writeStream.foreachBatch(
-            _semantic_ingest_batch(
-                centroids,
-                store_path,
-                corpus_path,
-                compact_every,
-                requantize_target=requantize_target,
-            )
-        )
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return _foreach_batch(
+        emb,
+        _semantic_ingest_batch(
+            centroids,
+            store_path,
+            corpus_path,
+            compact_every,
+            requantize_target=requantize_target,
+        ),
+        checkpoint,
+        "append",
     )
 
 
@@ -1727,12 +1695,9 @@ def run_semantic_ingest_sink(
 # stated migration is the same bucket-pruned layout / KV probe the
 # minhash sink documents.
 #
-# Exactly-once: the family's device verbatim — batch-scoped
-# overwrite partitions, store reads admit only earlier-arrived ROWS
-# (partition filter for pruning + row-level src_batch provenance for
-# exactness through generation folds; the minhash sink's docstring
-# has the full analysis), generation compaction via
-# _compact_partition_store. With id-ordered arrival,
+# Exactly-once: the batch-scoped store protocol (_BatchStore); the
+# store is born with provenance, so its probe drops NULL-origin rows.
+# With id-ordered arrival,
 # "first-seen canonical URL wins" is exactly the batch gate's
 # keep-lowest-doc_id rule — what the registered parity query
 # (stream_url_gate_compacted_parity, batch_windows.py) pins at the
@@ -1747,21 +1712,19 @@ def _url_ingest_batch(store_path: str, corpus_path: str, compact_every: int):
     hands the same function to foreachBatch. Input batches must
     carry ``doc_id`` and a raw ``url_raw`` column; all other columns
     ride through to the corpus."""
-    import os as _os
-
     from ..operators.webgate import (
         BLOCKED_SITES,
         canonicalize_url,
         extract_site,
     )
 
-    _schemas: dict = {}
+    store = _BatchStore(store_path, compact_every)
 
     def ingest_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
         spark = batch_df.sparkSession
-        _compact_partition_store(spark, store_path, batch_id, compact_every)
+        store.fold(spark, batch_id)
         # (a)+(b): canonicalize, site-gate — one narrow map stage
         batch = (
             batch_df.withColumn(
@@ -1787,15 +1750,11 @@ def _url_ingest_batch(store_path: str, corpus_path: str, compact_every: int):
         # broadcast back for the anti-join — the store is never
         # shuffled (block comment). ``seen`` is consumed exactly once
         # by the broadcast build, so it needs no checkpoint.
-        if _os.path.exists(store_path):
-            store = _with_src_batch(
-                _cached_schema_read(spark, store_path, _schemas)
-            ).filter(
-                (F.col("batch") < batch_id)
-                & (F.col("src_batch") < batch_id)
-            )
+        earlier = store.earlier(spark, batch_id)
+        if earlier is not None:
             seen = (
-                store.join(
+                earlier.filter(F.col("src_batch").isNotNull())
+                .join(
                     F.broadcast(kept.select("url_canon")),
                     "url_canon",
                     "left_semi",
@@ -1807,19 +1766,13 @@ def _url_ingest_batch(store_path: str, corpus_path: str, compact_every: int):
             kept = kept.localCheckpoint(eager=False)
         # (e) batch-scoped overwrite writes: replay-idempotent, and
         # independent given the shared checkpoint — run concurrently
-        sub = f"batch={batch_id}"
         _parallel_writes(
             lambda: kept.write.mode("overwrite").parquet(
-                f"{corpus_path}/{sub}"
+                f"{corpus_path}/batch={batch_id}"
             ),
-            lambda: kept.select(
-                "url_canon",
-                "site",
-                "doc_id",
-                F.lit(batch_id).alias("src_batch"),
-            )
-            .write.mode("overwrite")
-            .parquet(f"{store_path}/{sub}"),
+            lambda: store.write(
+                kept.select("url_canon", "site", "doc_id"), batch_id
+            ),
         )
 
     return ingest_batch
@@ -1836,14 +1789,11 @@ def run_url_ingest_sink(
     and blocklist gating — the batch URL pre-gate
     (operators/webgate.py) run continuously (block comment above).
     ``docs`` must carry ``doc_id`` and ``url_raw``."""
-    return (
-        docs.writeStream.foreachBatch(
-            _url_ingest_batch(store_path, corpus_path, compact_every)
-        )
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return _foreach_batch(
+        docs,
+        _url_ingest_batch(store_path, corpus_path, compact_every),
+        checkpoint,
+        "append",
     )
 
 
@@ -1880,13 +1830,11 @@ def run_url_ingest_sink(
 # fixed lifecycle cost; re-probe when a deployment's store passes
 # ~10^8 grams.
 #
-# Exactly-once: the family device verbatim — batch-scoped overwrite
-# partitions, store reads admit only earlier-arrived ROWS (partition
-# filter for pruning + row-level src_batch provenance for exactness
-# through generation folds; the minhash sink's docstring has the
-# full analysis). gram hashes are xxhash64 (the production twin's
-# hash): cut decisions are a function of gram EQUALITY only, so any
-# injective hash yields the same cuts — the md5/xxhash64 twin
+# Exactly-once: the batch-scoped store protocol (_BatchStore); the
+# store is born with provenance, so its probe drops NULL-origin rows.
+# Gram hashes are xxhash64 (the production twin's hash): cut decisions
+# are a function of gram EQUALITY only, so any injective hash yields
+# the same cuts — the md5/xxhash64 twin
 # argument from the batch queries, which is also why the parity
 # oracle can replay the md5 chain.
 
@@ -1898,18 +1846,16 @@ def _span_ingest_batch(store_path: str, corpus_path: str, compact_every: int):
     deterministic id-ordered batches, while the streaming wrapper
     hands the same function to foreachBatch. Input batches must
     carry ``doc_id`` and ``text``."""
-    import os as _os
-
     from ..functions.text import norm_text
     from ..operators.dedup import SPAN_K, span_cut_apply
 
-    _schemas: dict = {}
+    store = _BatchStore(store_path, compact_every)
 
     def ingest_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
         spark = batch_df.sparkSession
-        _compact_partition_store(spark, store_path, batch_id, compact_every)
+        store.fold(spark, batch_id)
         # lazy lineage cuts: toks feeds the gram extraction AND the
         # final cut, grams feeds the store probe AND the occurrence
         # window — each materializes once inside its first consumer's
@@ -1952,15 +1898,11 @@ def _span_ingest_batch(store_path: str, corpus_path: str, compact_every: int):
         # cross-batch: grams the store has already seen — broadcast
         # the batch's (bounded) distinct gram keys against the store,
         # broadcast the matches back; the store is never shuffled.
-        if _os.path.exists(store_path):
-            store = _with_src_batch(
-                _cached_schema_read(spark, store_path, _schemas)
-            ).filter(
-                (F.col("batch") < batch_id)
-                & (F.col("src_batch") < batch_id)
-            )
+        earlier = store.earlier(spark, batch_id)
+        if earlier is not None:
             seen = (
-                store.join(
+                earlier.filter(F.col("src_batch").isNotNull())
+                .join(
                     F.broadcast(firsts.select("g")),
                     "g",
                     "left_semi",
@@ -2000,14 +1942,12 @@ def _span_ingest_batch(store_path: str, corpus_path: str, compact_every: int):
                 (F.col("pos") + SPAN_K).cast("long").alias("e"),
             )
         )
-        # new first-seen grams enter the store (provenance columns
-        # ride along for debuggability; src_batch is the probe's
-        # row-level filter key)
+        # new first-seen grams enter the store (the first occurrence
+        # rides along for debuggability)
         new_firsts = firsts.filter(F.col("_seen").isNull()).select(
             "g",
             F.col("f.doc_id").alias("doc_id"),
             F.col("f.pos").alias("pos"),
-            F.lit(batch_id).alias("src_batch"),
         )
         # batch-scoped overwrite writes: replay-idempotent, and
         # independent given the shared lazy checkpoints (grams /
@@ -2016,14 +1956,11 @@ def _span_ingest_batch(store_path: str, corpus_path: str, compact_every: int):
         # The cleaned frame is consumed only by its write — it
         # streams straight into the parquet sink with no pre-write
         # checkpoint (the write IS its materialization).
-        sub = f"batch={batch_id}"
         _parallel_writes(
             lambda: span_cut_apply(toks, removable)
             .write.mode("overwrite")
-            .parquet(f"{corpus_path}/{sub}"),
-            lambda: new_firsts.write.mode("overwrite").parquet(
-                f"{store_path}/{sub}"
-            ),
+            .parquet(f"{corpus_path}/batch={batch_id}"),
+            lambda: store.write(new_firsts, batch_id),
         )
 
     return ingest_batch
@@ -2041,14 +1978,11 @@ def run_span_dedup_ingest_sink(
     above). ``docs`` must carry ``doc_id`` and ``text``; the corpus
     output is the cleaned per-doc frame (n_tokens_before/after,
     n_spans_cut, cleaned_text)."""
-    return (
-        docs.writeStream.foreachBatch(
-            _span_ingest_batch(store_path, corpus_path, compact_every)
-        )
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return _foreach_batch(
+        docs,
+        _span_ingest_batch(store_path, corpus_path, compact_every),
+        checkpoint,
+        "append",
     )
 
 
@@ -2121,12 +2055,7 @@ def run_cdc_sink(
         )
         staged_swap(final, store_path)
 
-    return (
-        events.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _foreach_batch(events, apply_batch, checkpoint, "append")
 
 
 def cdc_store_state(spark: SparkSession, store_path: str) -> DataFrame:
@@ -2253,51 +2182,25 @@ def run_cms_sink(
     """Streaming count-min sketch maintenance: every micro-batch
     computes ITS OWN d x w cell counts (a bounded-size aggregate —
     CMS_D x CMS_W rows regardless of batch size) and writes them to a
-    batch-scoped partition (``batch=<id>``, overwrite). The live
-    sketch is the cell-wise SUM over batch partitions — the
-    mergeability that makes CMS the streaming-native frequency
-    structure (operators/stats.py agg_heavy_hitters_cms is the batch
-    twin; ``read_cms_estimates`` below probes the merged sketch with
-    the identical hash family, so stream-maintained estimates are
-    bit-equal to a batch build over the same rows).
-
-    Exactly-once: additive state CANNOT be idempotently re-added, so
-    a replayed batch must not merge-add twice — the batch-scoped
-    overwrite makes replay rewrite the same partition to the same
-    bytes instead (the dedup-ingest sink's device, applied to the
-    additive-sketch case). Store size is O(batches x d x w) tiny
-    rows; committed partitions fold into generation partitions via
-    ``_compact_partition_store`` once ``compact_every`` accumulate
-    (VERDICT r8 item 5). Because cell counts are ADDITIVE, every
-    partial carries its ``src_batch`` id: full-row dedup then folds
-    only bit-identical crash copies (two batches that legitimately
-    produced equal cell counts differ on src_batch), and the read
-    fold dedups on the provenance key — the OOV sink's
-    double-count-proof discipline."""
+    batch-scoped partition. The live sketch is the cell-wise SUM over
+    batch partitions — the mergeability that makes CMS the
+    streaming-native frequency structure (operators/stats.py
+    agg_heavy_hitters_cms is the batch twin; ``read_cms_estimates``
+    below probes the merged sketch with the identical hash family, so
+    stream-maintained estimates are bit-equal to a batch build over
+    the same rows). Store size is O(batches x d x w) tiny rows;
+    replay safety, compaction and the double-count-proof read are the
+    batch-scoped store protocol (``_BatchStore``)."""
     from ..operators.stats import cms_hash_explode
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        _compact_partition_store(
-            batch_df.sparkSession, store_path, batch_id, compact_every
-        )
-        cells = (
-            cms_hash_explode(batch_df, "user_id")
-            .groupBy("j", "bucket")
-            .agg(F.count(F.lit(1)).alias("cell_cnt"))
-            .withColumn("src_batch", F.lit(batch_id))
-        )
-        cells.coalesce(1).write.mode("overwrite").parquet(
-            f"{store_path}/batch={batch_id}"
-        )
-
-    return (
-        events.writeStream.foreachBatch(write_batch)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return _monitor_sink(
+        events,
+        store_path,
+        checkpoint,
+        compact_every,
+        lambda b: cms_hash_explode(b, "user_id")
+        .groupBy("j", "bucket")
+        .agg(F.count(F.lit(1)).alias("cell_cnt")),
     )
 
 
@@ -2310,17 +2213,11 @@ def read_cms_estimates(spark: SparkSession, store_path: str, keys: DataFrame) ->
     as 0 — left join + coalesce, never an inner join that would
     inflate the min over populated cells only or drop the key from
     the output (review r5 round 2 #3; a CMS must never report an
-    unseen key above its collision mass).
-
-    Dedups on the ``(src_batch, j, bucket)`` provenance key before
-    summing — the crash window between a compaction's generation
-    write and its source delete (or a concurrent read mid-compaction)
-    exposes the same partial twice (ADVICE r8; read_histogram)."""
+    unseen key above its collision mass)."""
     from ..operators.stats import cms_hash_explode
 
     merged = (
-        spark.read.parquet(store_path)
-        .dropDuplicates(["src_batch", "j", "bucket"])
+        _fold_partials(spark, store_path, ["j", "bucket"])
         .groupBy("j", "bucket")
         .agg(F.sum("cell_cnt").alias("cell_cnt"))
     )
@@ -2347,53 +2244,28 @@ def run_cusum_sink(
 ) -> StreamingQuery:
     """Streaming CUSUM change-point maintenance: every micro-batch
     writes its (event_type, day) PARTIAL moments — exact DECIMAL
-    value-sum and row count — to a batch-scoped partition
-    (``batch=<id>``, overwrite). Daily means are NEVER computed per
-    batch: a day split across micro-batches must contribute one mean
-    computed from the MERGED sum/count, so the stored state is the
-    algebraic partial (the same sufficient-statistics discipline as
-    the sketch MVs), and ``read_cusum_changepoints`` below folds the
-    partitions and hands the merged daily frame to the SAME
-    ``cusum_from_daily`` tail the batch operator uses — bit-equal by
-    construction, not by tolerance.
-
-    Exactly-once: additive partials cannot be idempotently re-added,
-    so replay safety comes from the batch-scoped overwrite (the
-    run_cms_sink device) — a replayed batch rewrites its own
-    partition to the same bytes. Store size is O(batches x types x
-    days-touched-per-batch) tiny rows; committed partitions fold into
-    generation partitions via ``_compact_partition_store`` once
-    ``compact_every`` accumulate (VERDICT r8 item 5), with the
-    additive-partial provenance discipline: every partial carries its
-    ``src_batch`` id so full-row dedup folds only bit-identical crash
-    copies, and the read side dedups on the provenance key."""
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        _compact_partition_store(
-            batch_df.sparkSession, store_path, batch_id, compact_every
-        )
-        partial = (
-            batch_df.groupBy(
-                "event_type", F.date_trunc("day", F.col("ts")).alias("day")
-            )
-            .agg(
-                F.sum(F.round("value", 8).cast("decimal(18,8)")).alias("sv"),
-                F.count(F.lit(1)).alias("cnt"),
-            )
-            .withColumn("src_batch", F.lit(batch_id))
-        )
-        partial.coalesce(1).write.mode("overwrite").parquet(
-            f"{store_path}/batch={batch_id}"
-        )
-
-    return (
-        events.writeStream.foreachBatch(write_batch)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    value-sum and row count — to a batch-scoped partition. Daily
+    means are NEVER computed per batch: a day split across
+    micro-batches must contribute one mean computed from the MERGED
+    sum/count, so the stored state is the algebraic partial (the same
+    sufficient-statistics discipline as the sketch MVs), and
+    ``read_cusum_changepoints`` below folds the partitions and hands
+    the merged daily frame to the SAME ``cusum_from_daily`` tail the
+    batch operator uses — bit-equal by construction, not by
+    tolerance. Store size is O(batches x types x days-touched-per-
+    batch) tiny rows; replay safety and compaction are the
+    batch-scoped store protocol (``_BatchStore``)."""
+    return _monitor_sink(
+        events,
+        store_path,
+        checkpoint,
+        compact_every,
+        lambda b: b.groupBy(
+            "event_type", F.date_trunc("day", F.col("ts")).alias("day")
+        ).agg(
+            F.sum(F.round("value", 8).cast("decimal(18,8)")).alias("sv"),
+            F.count(F.lit(1)).alias("cnt"),
+        ),
     )
 
 
@@ -2401,15 +2273,11 @@ def read_cusum_changepoints(spark: SparkSession, store_path: str) -> DataFrame:
     """Fold the stream-maintained daily partials and run the shared
     batch CUSUM tail: merge = decimal-sum of sums + sum of counts per
     (event_type, day), mean = round(merged_sum/merged_cnt, 8) — the
-    identical expression the batch operator computes from raw rows.
-    Dedups on the ``(src_batch, event_type, day)`` provenance key
-    first (crash-window / concurrent-reader double-count protection —
-    ADVICE r8; read_histogram)."""
+    identical expression the batch operator computes from raw rows."""
     from ..operators.stats import cusum_from_daily
 
     merged = (
-        spark.read.parquet(store_path)
-        .dropDuplicates(["src_batch", "event_type", "day"])
+        _fold_partials(spark, store_path, ["event_type", "day"])
         .groupBy("event_type", "day")
         .agg(F.sum("sv").alias("sv"), F.sum("cnt").alias("cnt"))
         .select(
@@ -2442,55 +2310,35 @@ def run_psi_sink(
     fit-on-reference-only rule, made explicit by the API), written
     once to ``<store>/ref``; every micro-batch then bins its values
     against those fences and writes its (bin, n) PARTIAL counts to a
-    batch-scoped overwrite partition under ``<store>/cur``. Bin counts
-    are additive sufficient statistics, so the live current
-    distribution is the fold over batch partitions — the
-    run_cusum_sink discipline applied to the drift family.
+    batch-scoped store under ``<store>/cur``. Bin counts are additive
+    sufficient statistics, so the live current distribution is the
+    fold over batch partitions — the run_cusum_sink discipline applied
+    to the drift family.
 
     ``read_psi_drift`` folds the partitions and hands (bin, nr, nc)
     to the SAME ``psi_from_bin_counts`` tail the batch query uses:
     feeding the sink ref = first half / stream = second half of a
     table reproduces ``stats_psi_drift`` on that table BIT-EQUALLY
-    (pinned in test_streaming). Replay safety: batch-scoped overwrite,
-    never merge-add. The ``cur`` store's committed partitions fold
-    into generation partitions via ``_compact_partition_store`` once
-    ``compact_every`` accumulate (VERDICT r8 item 5), with the
-    additive-partial ``src_batch`` provenance discipline (run_oov_sink
-    docstring); the one-off ``ref`` write never grows."""
+    (pinned in test_streaming). The ``cur`` store follows the
+    batch-scoped store protocol (``_BatchStore``); the one-off ``ref``
+    write never grows."""
     from ..operators.stats import psi_bin_expr, psi_decile_cuts
 
     cuts = psi_decile_cuts(ref.filter(F.col("value").isNotNull()))
-    ref_cnt = (
-        ref.filter(F.col("value").isNotNull())
-        .select(psi_bin_expr(cuts).alias("bin"))
-        .groupBy("bin")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    ref_cnt.coalesce(1).write.mode("overwrite").parquet(f"{store_path}/ref")
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        _compact_partition_store(
-            batch_df.sparkSession, f"{store_path}/cur", batch_id, compact_every
-        )
-        cells = (
-            batch_df.filter(F.col("value").isNotNull())
+    def bin_counts(df: DataFrame) -> DataFrame:
+        return (
+            df.filter(F.col("value").isNotNull())
             .select(psi_bin_expr(cuts).alias("bin"))
             .groupBy("bin")
             .agg(F.count(F.lit(1)).alias("n"))
-            .withColumn("src_batch", F.lit(batch_id))
-        )
-        cells.coalesce(1).write.mode("overwrite").parquet(
-            f"{store_path}/cur/batch={batch_id}"
         )
 
-    return (
-        events.writeStream.foreachBatch(write_batch)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    bin_counts(ref).coalesce(1).write.mode("overwrite").parquet(
+        f"{store_path}/ref"
+    )
+    return _monitor_sink(
+        events, f"{store_path}/cur", checkpoint, compact_every, bin_counts
     )
 
 
@@ -2499,10 +2347,7 @@ def read_psi_drift(spark: SparkSession, store_path: str) -> DataFrame:
     reference counts and emit the batch operator's exact output
     columns (shared psi_from_bin_counts tail). Bins seen by only one
     side appear with a zero on the other (full outer + coalesce),
-    matching the batch query's bins-with-any-row semantics. The cur
-    fold dedups on the ``(src_batch, bin)`` provenance key first
-    (crash-window / concurrent-reader double-count protection —
-    ADVICE r8; read_histogram)."""
+    matching the batch query's bins-with-any-row semantics."""
     from ..operators.stats import psi_from_bin_counts
 
     ref_cnt = (
@@ -2511,8 +2356,7 @@ def read_psi_drift(spark: SparkSession, store_path: str) -> DataFrame:
         .agg(F.sum("n").alias("nr"))
     )
     cur_cnt = (
-        spark.read.parquet(f"{store_path}/cur")
-        .dropDuplicates(["src_batch", "bin"])
+        _fold_partials(spark, f"{store_path}/cur", ["bin"])
         .groupBy("bin")
         .agg(F.sum("n").alias("nc"))
     )
@@ -2542,41 +2386,22 @@ def run_kanonymity_sink(
     re-scanning the accumulated corpus. Every micro-batch writes its
     (nationkey, mktsegment, band) PARTIAL counts — the algebraic
     grain ``kanonymity_band_counts`` defines — to a batch-scoped
-    overwrite partition: counts merge by addition and distinct
-    sensitive bands are rows at the stored grain, so the audit is a
-    pure fold (the run_cusum_sink sufficient-statistics discipline
-    applied to the privacy family).
+    partition: counts merge by addition and distinct sensitive bands
+    are rows at the stored grain, so the audit is a pure fold (the
+    run_cusum_sink sufficient-statistics discipline applied to the
+    privacy family).
 
     ``read_kanonymity_audit`` folds the partitions through the SAME
     ``kanonymity_from_band_counts`` tail the batch operator uses —
     streaming a table in any batch slicing reproduces
     ``privacy_k_anonymity`` on that table bit-equally (pinned in
-    test_streaming). Replay safety: batch-scoped overwrite, never
-    merge-add. Store size: O(batches x QI-groups x bands touched per
-    batch); committed partitions fold into generation partitions via
-    ``_compact_partition_store`` once ``compact_every`` accumulate
-    (VERDICT r8 item 5), with the additive-partial ``src_batch``
-    provenance discipline (run_oov_sink docstring)."""
+    test_streaming). Store size: O(batches x QI-groups x bands touched
+    per batch); replay safety and compaction are the batch-scoped
+    store protocol (``_BatchStore``)."""
     from ..operators.quality import kanonymity_band_counts
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        _compact_partition_store(
-            batch_df.sparkSession, store_path, batch_id, compact_every
-        )
-        kanonymity_band_counts(batch_df).withColumn(
-            "src_batch", F.lit(batch_id)
-        ).coalesce(1).write.mode("overwrite").parquet(
-            f"{store_path}/batch={batch_id}"
-        )
-
-    return (
-        customers.writeStream.foreachBatch(write_batch)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return _monitor_sink(
+        customers, store_path, checkpoint, compact_every, kanonymity_band_counts
     )
 
 
@@ -2584,14 +2409,11 @@ def read_kanonymity_audit(spark: SparkSession, store_path: str) -> DataFrame:
     """Fold the stream-maintained band-count partials and run the
     shared audit tail: merged cnt per (QI, band), then group_size /
     l_sensitive / threshold flags — identical expressions to the
-    batch query's. Dedups on the full provenance key first
-    (crash-window / concurrent-reader double-count protection —
-    ADVICE r8; read_histogram)."""
+    batch query's."""
     from ..operators.quality import kanonymity_from_band_counts
 
     merged = (
-        spark.read.parquet(store_path)
-        .dropDuplicates(["src_batch", "nationkey", "mktsegment", "band"])
+        _fold_partials(spark, store_path, ["nationkey", "mktsegment", "band"])
         .groupBy("nationkey", "mktsegment", "band")
         .agg(F.sum("cnt").alias("cnt"))
     )
@@ -2609,73 +2431,41 @@ def run_histogram_sink(
 ) -> StreamingQuery:
     """Streaming value-distribution monitor: each micro-batch writes
     its (event_type, bin, n, lo_raw, hi_raw) equi-width histogram
-    PARTIAL to a batch-scoped overwrite partition; ``read_histogram``
-    folds partitions into exactly the batch operator's output
+    PARTIAL to a batch-scoped partition; ``read_histogram`` folds
+    partitions into exactly the batch operator's output
     (operators/breadth.py agg_histogram_equi_width) — counts add,
     extrema take min/max, so the fold is bit-equal by construction.
     The drift use: diff today's folded histogram against a reference
     release to see value-distribution shift at bin grain (the PSI
     sink's sibling with the raw distribution retained, not just the
-    divergence scalar).
-
-    Exactly-once and growth: the OOV sink's devices verbatim —
-    batch-scoped overwrite partitions for replay safety, additive
-    partials carrying their ``src_batch`` provenance id, and
-    generation compaction via ``_compact_partition_store`` dedup-ing
-    on (src_batch, event_type, bin)."""
+    divergence scalar). Replay safety and compaction are the
+    batch-scoped store protocol (``_BatchStore``)."""
     from ..operators.breadth import HIST_HI, HIST_LO, N_HIST_BINS
 
     width = (HIST_HI - HIST_LO) / N_HIST_BINS
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        _compact_partition_store(spark, store_path, batch_id, compact_every)
-        bin_ = F.least(
-            F.floor((F.col("value") - HIST_LO) / width),
-            F.lit(N_HIST_BINS - 1),
-        ).cast("int")
-        partial = (
-            batch_df.groupBy("event_type", bin_.alias("bin"))
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.min("value").alias("lo_raw"),
-                F.max("value").alias("hi_raw"),
-            )
-            .withColumn("src_batch", F.lit(batch_id))
-        )
-        partial.coalesce(1).write.mode("overwrite").parquet(
-            f"{store_path}/batch={batch_id}"
-        )
-
-    return (
-        events.writeStream.foreachBatch(write_batch)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    bin_ = F.least(
+        F.floor((F.col("value") - HIST_LO) / width),
+        F.lit(N_HIST_BINS - 1),
+    ).cast("int")
+    return _monitor_sink(
+        events,
+        store_path,
+        checkpoint,
+        compact_every,
+        lambda b: b.groupBy("event_type", bin_.alias("bin")).agg(
+            F.count(F.lit(1)).alias("n"),
+            F.min("value").alias("lo_raw"),
+            F.max("value").alias("hi_raw"),
+        ),
     )
 
 
 def read_histogram(spark: SparkSession, store_path: str) -> DataFrame:
     """Fold the stream-maintained histogram partials to the batch
     operator's exact output: counts sum, extrema min/max, THEN the
-    round(4) — rounding per-partial first would break bit-equality.
-
-    The fold first dedups on the ``(src_batch, event_type, bin)``
-    provenance key, mirroring the compactor: between the generation
-    write (``_SUCCESS`` sealed) and the source-directory delete —
-    i.e. after a crash in that window, or for any concurrent reader
-    during compaction — the same partial exists in BOTH the
-    generation and its original batch partition, and an undeduped sum
-    would double-count n until the next compaction healed the store
-    (ADVICE r8). The key (not the full row) is required here because
-    this read is from the store ROOT, where partition discovery adds
-    a ``batch`` column that DIFFERS between the two copies."""
+    round(4) — rounding per-partial first would break bit-equality."""
     return (
-        spark.read.parquet(store_path)
-        .dropDuplicates(["src_batch", "event_type", "bin"])
+        _fold_partials(spark, store_path, ["event_type", "bin"])
         .groupBy("event_type", "bin")
         .agg(
             F.sum("n").alias("n"),
@@ -2697,27 +2487,21 @@ def run_oov_sink(
     tokenizer's world view — the run_psi_sink fit-on-reference rule
     applied to text), written once to ``<store>/vocab``; every
     micro-batch of incoming documents then writes its (in_vocab,
-    token_count) PARTIAL sums to a batch-scoped overwrite partition.
-    Token counts are additive sufficient statistics, so the live OOV
-    rate is a pure fold — when it climbs, the fixed tokenizer is
-    shredding fresh text into bytes and the vocab (or the upstream
-    filter) needs attention.
+    token_count) PARTIAL sums to a batch-scoped store under
+    ``<store>/cur``. Token counts are additive sufficient statistics,
+    so the live OOV rate is a pure fold — when it climbs, the fixed
+    tokenizer is shredding fresh text into bytes and the vocab (or
+    the upstream filter) needs attention.
 
     ``read_oov_rate`` folds the partitions into the corpus-level
-    (n_tokens, n_oov, oov_rate); replay safety is the batch-scoped
-    overwrite (never merge-add). Store: O(batches) two-long rows —
+    (n_tokens, n_oov, oov_rate). Store: O(batches) two-long rows —
     but the measured growth term was the PARTITION count (file
     listing + per-partition scan, ~6 ms/batch, crossover ~150-200
-    batches — SCALE.md), so committed partitions fold into generation
-    partitions via ``_compact_partition_store`` once ``compact_every``
-    accumulate. Because the partials are ADDITIVE, a bare sum can't
-    heal a crash between generation write and source delete (two
-    equal partials may be legitimate); every partial therefore
-    carries its ``src_batch`` id, compaction's full-row dedup folds
-    crash copies (src_batch included in the row), and the READ fold
-    (``read_oov_rate``) dedups on the provenance key too — so the
-    monitor is double-count-proof at every crash point AND for
-    concurrent readers mid-compaction (ADVICE r8)."""
+    batches — SCALE.md), which the batch-scoped store protocol's
+    compaction bounds (``_BatchStore``). Because the partials are
+    ADDITIVE, a bare sum can't heal a crash between generation write
+    and source delete (two equal partials may be legitimate) — the
+    reason every monitor partial carries ``src_batch`` (ADVICE r8)."""
     from ..operators.text import OOV_VOCAB_K
     from ..functions.text import tokens as _tokens
 
@@ -2731,45 +2515,27 @@ def run_oov_sink(
     )
     vocab.coalesce(1).write.mode("overwrite").parquet(f"{store_path}/vocab")
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        _compact_partition_store(
-            spark, f"{store_path}/cur", batch_id, compact_every
-        )
-        v = spark.read.parquet(f"{store_path}/vocab").withColumn(
+    def partial(batch_df: DataFrame) -> DataFrame:
+        v = batch_df.sparkSession.read.parquet(f"{store_path}/vocab").withColumn(
             "in_vocab", F.lit(True)
         )
         toks = batch_df.select(F.explode(_tokens(F.col("text"))).alias("w"))
-        partial = toks.join(F.broadcast(v), "w", "left").agg(
+        return toks.join(F.broadcast(v), "w", "left").agg(
             F.count(F.lit(1)).alias("n_tokens"),
             F.sum(F.when(F.col("in_vocab").isNull(), 1).otherwise(0)).alias("n_oov"),
         )
-        partial.withColumn("src_batch", F.lit(batch_id)).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(f"{store_path}/cur/batch={batch_id}")
 
-    return (
-        docs.writeStream.foreachBatch(write_batch)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return _monitor_sink(
+        docs, f"{store_path}/cur", checkpoint, compact_every, partial
     )
 
 
 def read_oov_rate(spark: SparkSession, store_path: str) -> DataFrame:
     """Fold the stream-maintained token partials into the corpus OOV
     rate — same n_oov/n_tokens expression as the batch operator's
-    per-doc column, at corpus grain.
-
-    Dedups on the ``src_batch`` provenance key before summing, for
-    the same crash-window / concurrent-reader double-count reason as
-    ``read_histogram`` (ADVICE r8)."""
+    per-doc column, at corpus grain."""
     return (
-        spark.read.parquet(f"{store_path}/cur")
-        .dropDuplicates(["src_batch"])
+        _fold_partials(spark, f"{store_path}/cur", [])
         .agg(F.sum("n_tokens").alias("n_tokens"), F.sum("n_oov").alias("n_oov"))
         .select(
             F.col("n_tokens").cast("long").alias("n_tokens"),
@@ -2805,51 +2571,27 @@ def run_sprt_sink(
     """Streaming sequential-test monitor: every micro-batch folds its
     events to per-day (trials, successes) PARTIALS — additive
     sufficient statistics, the run_psi_sink discipline — and writes
-    them to a batch-scoped overwrite partition. The cumulative LLR
-    and Wald decision are computed at READ time by the same
-    ``sprt_from_day_counts`` tail the batch query uses
+    them to a batch-scoped store under ``<store>/days``. The
+    cumulative LLR and Wald decision are computed at READ time by the
+    same ``sprt_from_day_counts`` tail the batch query uses
     (breadth7f.py), so the monitor's view of the experiment is
-    bit-equal to the batch replay by construction. Replay safety:
-    batch-scoped overwrite, never merge-add. The ``days`` store's
-    committed partitions fold into generation partitions via
-    ``_compact_partition_store`` once ``compact_every`` accumulate
-    (VERDICT r8 item 5), with the additive-partial ``src_batch``
-    provenance discipline (run_oov_sink docstring)."""
+    bit-equal to the batch replay by construction. Replay safety and
+    compaction are the batch-scoped store protocol (``_BatchStore``)."""
     from ..operators.breadth7f import sprt_day_counts
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        _compact_partition_store(
-            batch_df.sparkSession, f"{store_path}/days", batch_id, compact_every
-        )
-        sprt_day_counts(batch_df).withColumn(
-            "src_batch", F.lit(batch_id)
-        ).coalesce(1).write.mode("overwrite").parquet(
-            f"{store_path}/days/batch={batch_id}"
-        )
-
-    return (
-        events.writeStream.foreachBatch(write_batch)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return _monitor_sink(
+        events, f"{store_path}/days", checkpoint, compact_every, sprt_day_counts
     )
 
 
 def read_sprt_decision(spark: SparkSession, store_path: str) -> DataFrame:
     """Fold the per-batch day partials and hand the totals to the
     SAME SPRT tail the batch query uses — identical output columns,
-    bit-equal to ``ab_sequential_sprt`` over the same events. Dedups
-    on the ``(src_batch, day)`` provenance key first (crash-window /
-    concurrent-reader double-count protection — ADVICE r8;
-    read_histogram)."""
+    bit-equal to ``ab_sequential_sprt`` over the same events."""
     from ..operators.breadth7f import sprt_from_day_counts
 
     days = (
-        spark.read.parquet(f"{store_path}/days")
-        .dropDuplicates(["src_batch", "day"])
+        _fold_partials(spark, f"{store_path}/days", ["day"])
         .groupBy("day")
         .agg(
             F.sum("trials").alias("trials"),

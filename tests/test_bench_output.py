@@ -83,13 +83,21 @@ def test_prev_round_names_are_protected_from_the_trim(monkeypatch):
         assert name in d["queries"], name
 
 
-def test_prev_driver_names_reads_the_latest_committed_round():
-    """The protected set comes from the highest-numbered committed
-    BENCH_r<N>.json with a parsed query map (the c8 scaling run and
-    other non-round files must not match)."""
-    names = bench._prev_driver_names()
-    latest = json.load(open(Path(bench._REPO, "BENCH_r12.json")))
-    assert names == set(latest["parsed"]["queries"])
+def test_prev_driver_names_reads_the_latest_committed_round(tmp_path):
+    """The protected set comes from the highest-numbered
+    BENCH_r<N>.json with a parsed query map: a later round whose
+    bench line did not parse is skipped, the c8 scaling run and other
+    non-round files must not match, and r12 outranks r3 numerically
+    (not as a string)."""
+
+    def bench_file(name: str, parsed) -> None:
+        (tmp_path / name).write_text(json.dumps({"parsed": parsed}))
+
+    bench_file("BENCH_r3.json", {"queries": {"q_r3": 1.0}})
+    bench_file("BENCH_r12.json", {"queries": {"q_a": 1.0, "q_b": 2.0}})
+    bench_file("BENCH_r13.json", None)
+    bench_file("BENCH_r12_c8.json", {"queries": {"q_c8": 1.0}})
+    assert bench._prev_driver_names(repo=str(tmp_path)) == {"q_a", "q_b"}
 
 
 def test_budget_is_inside_the_driver_capture_window():

@@ -2630,3 +2630,82 @@ def test_chained_pipeline_span_cut_changes_minhash_verdict(spark, tmp_path):
         "fixture sanity: on raw text the boilerplate must make doc "
         "10 a minhash near-dup of doc 1"
     )
+
+
+def test_batch_store_caches_schema_only_once_it_carries_src_batch(
+    spark, tmp_path
+):
+    """A store instance whose first read hits a pre-provenance store
+    must not freeze that schema: a generation folded later carries
+    real ``src_batch`` values, and a frozen legacy schema would read
+    them back NULL (the rows then lose their origin for good)."""
+    from pitlapetl_spark.streaming.runtime import _BatchStore
+
+    root = str(tmp_path / "store")
+    spark.createDataFrame([(1, "a")], "doc_id long, t string").write.parquet(
+        f"{root}/batch=0"
+    )
+    store = _BatchStore(root, compact_every=2)
+    legacy = store.earlier(spark, 10).collect()
+    # legacy uncompacted partition: true origin = its batch id
+    assert [(r.doc_id, r.src_batch) for r in legacy] == [(1, 0)]
+
+    spark.createDataFrame(
+        [(2, "b", 5)], "doc_id long, t string, src_batch long"
+    ).write.parquet(f"{root}/batch=-1")
+    rows = {r.doc_id: r.src_batch for r in store.earlier(spark, 10).collect()}
+    assert rows[2] == 5
+
+
+def test_minhash_and_phash_ingest_bodies_fold_dedup_and_replay(
+    spark, tmp_path
+):
+    """Fast-tier coverage of the minhash and pHash ingest bodies,
+    driven directly on static frames: three id-ordered batches with
+    compact_every=2, so batch 2 probes a folded generation. A batch-2
+    re-crawl of a batch-0 payload is dropped, and replaying batch 2
+    leaves the corpus and store exactly as the uninterrupted run
+    wrote them."""
+    import os
+
+    from pitlapetl_spark.streaming.runtime import (
+        _dedup_ingest_batch,
+        _phash_ingest_batch,
+    )
+
+    def text(i):
+        return " ".join(
+            f"w{(i * 7919 + j * 104729) % 99991}" for j in range(30)
+        )
+
+    schema = "doc_id long, text string"
+    ids = [[b * 10 + k for k in range(1, 4)] for b in range(3)]
+    # the planted re-crawl: doc 1's payload again under a new id
+    batches = [
+        spark.createDataFrame([(d, text(d)) for d in ids[0]], schema),
+        spark.createDataFrame([(d, text(d)) for d in ids[1]], schema),
+        spark.createDataFrame(
+            [(d, text(d)) for d in ids[2]] + [(99, text(1))], schema
+        ),
+    ]
+
+    def rows(path):
+        return sorted(tuple(r) for r in spark.read.parquet(path).collect())
+
+    for name, factory in (
+        ("mh", _dedup_ingest_batch),
+        ("ph", _phash_ingest_batch),
+    ):
+        store = str(tmp_path / f"{name}_store")
+        corpus = str(tmp_path / f"{name}_corpus")
+        body = factory(store, corpus, compact_every=2)
+        for i, b in enumerate(batches):
+            body(b, i)
+        # batches 0 and 1 were folded into a generation before batch 2 probed
+        assert sorted(os.listdir(store)) == ["batch=-1", "batch=2"], name
+        kept = {r[0] for r in rows(corpus)}
+        assert 1 in kept and 99 not in kept, name
+        first_corpus, first_store = rows(corpus), rows(store)
+        body(batches[2], 2)
+        assert rows(corpus) == first_corpus, name
+        assert rows(store) == first_store, name
