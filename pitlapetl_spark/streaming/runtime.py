@@ -37,7 +37,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..sinks import merge_upsert_write
-from ..sources import EVENTS, EVENTS_RAW, parquet_ts_unit
+from ..sources import EVENTS, EVENTS_RAW, _first_part_file, parquet_ts_unit
 
 
 def read_events_stream(
@@ -475,7 +475,9 @@ def _compact_partition_store(
     folded batch can never be replayed, and a replay of the CURRENT
     batch still sees exactly the first run's view: the ingest sinks'
     probes filter on the per-row ``src_batch`` origin id (stamped at
-    write time, preserved verbatim through this fold), which
+    write time, preserved verbatim through this fold, and given to a
+    legacy positive partition's rows as its ``batch`` once the store
+    carries the column anywhere — ``_read_fold_sources``), which
     excludes the replayed batch's own rows and later-arrived rows
     even after they land inside a negative generation partition.
 
@@ -490,10 +492,10 @@ def _compact_partition_store(
     batches with a different payload — e.g. a re-delivered doc_id
     whose edited text cleared the dedup threshold — must keep both
     rows exactly as the uncompacted store would; ADVICE r8). The
-    leaf-directory read sees no ``batch`` partition column, so the
-    full row IS the payload identity. Readers that fold the store
-    from its ROOT (where partition discovery adds ``batch``) instead
-    dedup on the src_batch provenance key — ``_fold_partials``.
+    fold's read (``_read_fold_sources``) drops the ``batch``
+    partition column, so the full row IS the payload identity.
+    Readers that fold the store from its ROOT instead dedup on the
+    src_batch provenance key — ``_fold_partials``.
     A crash mid-write leaves a marker-less generation dir that the
     retry simply overwrites from the still-present sources. On an
     object store, swap the directory delete for the committer-based
@@ -507,10 +509,36 @@ def _compact_partition_store(
         return
     sources = list(committed.values()) + list(gens.values())
     target = _os.path.join(root, f"batch={min(gens, default=0) - 1}")
-    merged = spark.read.parquet(*sources).dropDuplicates()
+    merged = _read_fold_sources(spark, root, sources).dropDuplicates()
     merged.write.mode("overwrite").parquet(target)
     for p in sources:
         _shutil.rmtree(p, ignore_errors=True)
+
+
+def _read_fold_sources(
+    spark: SparkSession, root: str, sources: list[str]
+) -> DataFrame:
+    """Read a fold's source partitions as one frame. When any source
+    carries ``src_batch``, the frame keeps it as each row's origin
+    wherever that is known (the fold-time form of ``_with_src_batch``):
+    a legacy positive partition's rows are stamped with its ``batch``,
+    legacy generation rows stay NULL. A store with no provenance
+    anywhere folds without the column, as before it existed: there
+    the full row alone identifies a crash copy. Spark
+    takes the schema from one footer; when that footer predates the
+    column, the other sources' footers are read on the driver, and
+    the re-read with the sampled schema plus ``src_batch`` launches no
+    further Spark job."""
+    import pyarrow.parquet as _pq
+
+    reader = spark.read.option("basePath", root)
+    df = reader.parquet(*sources)
+    if "src_batch" not in df.columns:
+        footers = filter(None, map(_first_part_file, sources))
+        if not any("src_batch" in _pq.read_schema(f).names for f in footers):
+            return df.drop("batch")
+        df = reader.schema(df.schema.add("src_batch", "integer")).parquet(*sources)
+    return _with_src_batch(df).drop("batch")
 
 
 def _foldable_partitions(
@@ -609,13 +637,14 @@ def _with_src_batch(df):
       ``_BatchStore`` describes: self-rows are excluded exactly, but
       rows that originally arrived LATER than the replayed batch are
       visible on reprocess (the documented pre-provenance inexactness)
-      until the store is rewritten with real provenance."""
+      until the store is rewritten with real provenance.
+
+    In a store that mixes both kinds of partition, only the NULLs are
+    filled: a provenance row keeps its stamped origin."""
+    origin = F.when(F.col("batch") >= 0, F.col("batch"))
     if "src_batch" in df.columns:
-        return df
-    return df.withColumn(
-        "src_batch",
-        F.when(F.col("batch") >= 0, F.col("batch")).cast("long"),
-    )
+        return df.withColumn("src_batch", F.coalesce("src_batch", origin))
+    return df.withColumn("src_batch", origin.cast("long"))
 
 
 class _BatchStore:
@@ -894,11 +923,9 @@ def _relabel_store(
     sources = list(committed.values()) + list(gens.values())
     if not sources:
         return
-    base = spark.read.parquet(*sources)
+    base = _read_fold_sources(spark, store_path, sources)
     if "src_batch" not in base.columns:
-        # leaf-path reads carry no ``batch`` partition column, so the
-        # _with_src_batch migration cannot recover per-batch origins
-        # here; a provenance-less store relabels under the NULL =
+        # a store with no provenance anywhere relabels under the NULL =
         # origin-unknown semantics (the probes' legacy self-key guard)
         base = base.withColumn("src_batch", F.lit(None).cast("long"))
     base = base.drop("label").dropDuplicates()

@@ -27,8 +27,8 @@ SF_CORRECTNESS = "/root/testdata/sf0.01"
 # plan-lint suites, and every operator unit/property test under 10 s.
 # The deselected tests are the lifecycle robustness tier (restart /
 # replay / compaction-crash matrices, the two 800-s one-test sweeps)
-# — run them with PITLAP_FULL_TESTS=1 (builders do, every round,
-# before the end-of-round commit; see OPTIMIZATION_r13.md).
+# — run them with PITLAP_FULL_TESTS=1 (the commands, and which changes
+# must run them: .claude/skills/verify/SKILL.md, "Lifecycle tier").
 _SLOW_NODEIDS = frozenset(
     (
         "test_breadth7.py::test_mix_temperature_allocation_is_exact",

@@ -2344,11 +2344,14 @@ def test_with_src_batch_stamps_null_for_legacy_generations(spark):
         r.doc_id: r.src_batch for r in _with_src_batch(df).collect()
     }
     assert got == {1: 0, 2: 3, 3: None, 4: None}
-    # already-provenanced frames pass through untouched
-    stamped = spark.createDataFrame(
-        [(1, -1, 5)], "doc_id long, batch int, src_batch int"
+    # provenance frames keep every stamped origin; only NULLs are
+    # filled, under the same two cases
+    mixed = spark.createDataFrame(
+        [(1, -1, 5), (2, 0, None), (3, -2, None)],
+        "doc_id long, batch int, src_batch int",
     )
-    assert _with_src_batch(stamped) is stamped
+    got = {r.doc_id: r.src_batch for r in _with_src_batch(mixed).collect()}
+    assert got == {1: 5, 2: 0, 3: None}
 
 
 def test_ingest_reprocess_against_legacy_compacted_store(spark, tmp_path):
@@ -2654,7 +2657,75 @@ def test_batch_store_caches_schema_only_once_it_carries_src_batch(
         [(2, "b", 5)], "doc_id long, t string, src_batch long"
     ).write.parquet(f"{root}/batch=-1")
     rows = {r.doc_id: r.src_batch for r in store.earlier(spark, 10).collect()}
-    assert rows[2] == 5
+    # the store now mixes both kinds: the legacy row keeps its origin
+    assert rows == {1: 0, 2: 5}
+
+
+def test_fold_of_a_mixed_schema_store_keeps_every_known_origin(
+    spark, tmp_path
+):
+    """Folding a store that mixes legacy partitions (no ``src_batch``)
+    with provenance partitions: the generation keeps ``src_batch``,
+    a legacy positive partition's rows get their ``batch`` as origin
+    and legacy generation rows stay NULL. That holds also when the
+    footer Spark samples for the schema is a legacy one: here a
+    legacy generation beside the provenance generation an interrupted
+    fold left behind. Both the compaction fold and the quantizer
+    relabel read their sources this way."""
+    import os
+
+    from pitlapetl_spark.streaming.runtime import (
+        _compact_partition_store,
+        _relabel_store,
+    )
+
+    legacy, stamped = "doc_id long, t string", "doc_id long, t string, src_batch int"
+
+    def write(root, batch, rows, schema):
+        spark.createDataFrame(rows, schema).write.parquet(f"{root}/batch={batch}")
+
+    def folded(root, gen, *cols):
+        assert sorted(os.listdir(root)) == [f"batch={gen}"]
+        df = spark.read.parquet(f"{root}/batch={gen}").select(*cols)
+        return sorted(map(tuple, df.collect()), key=str)
+
+    root = str(tmp_path / "store")
+    write(root, 0, [(1, "a")], legacy)
+    write(root, 1, [(2, "b", 1)], stamped)
+    _compact_partition_store(spark, root, current_batch=2, threshold=2)
+    assert folded(root, -1, "doc_id", "t", "src_batch") == [
+        (1, "a", 0),
+        (2, "b", 1),
+    ]
+
+    crashed = str(tmp_path / "crashed")
+    write(crashed, -1, [(0, "z")], legacy)
+    write(crashed, -2, [(0, "z", None), (5, "e", 3)], stamped)
+    write(crashed, 4, [(1, "a")], legacy)
+    write(crashed, 5, [(2, "b", 5)], stamped)
+    _compact_partition_store(spark, crashed, current_batch=6, threshold=2)
+    assert folded(crashed, -3, "doc_id", "t", "src_batch") == [
+        (0, "z", None),
+        (1, "a", 4),
+        (2, "b", 5),
+        (5, "e", 3),
+    ]
+
+    sem = str(tmp_path / "sem")
+    vecs = "vec_id long, label int, v array<double>, nrm double, kept boolean"
+    write(sem, -1, [(0, 0, [1.0, 0.0], 1.0, True)], vecs)
+    write(sem, 0, [(1, 0, [0.0, 1.0], 1.0, True)], vecs)
+    write(sem, 1, [(2, 1, [1.0, 1.0], 1.4, True, 1)], vecs + ", src_batch int")
+    cent = spark.createDataFrame(
+        [(0, [1.0, 0.0], 1.0), (1, [0.0, 1.0], 1.0)],
+        "label int, cv array<double>, cnrm double",
+    )
+    _relabel_store(spark, sem, current_batch=2, cent=cent)
+    assert set(folded(sem, -2, "vec_id", "src_batch")) == {
+        (0, None),
+        (1, 0),
+        (2, 1),
+    }
 
 
 def test_minhash_and_phash_ingest_bodies_fold_dedup_and_replay(
